@@ -1,6 +1,10 @@
 package graft
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, struct, xxhash64}
+
+import scala.jdk.CollectionConverters._
 
 object Bench {
   /** Force full evaluation of every output column. `count()` is NOT
@@ -47,56 +51,16 @@ object Bench {
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
-  /** Extract the brace-balanced object value of `"key":{...}` from a
-    * one-line JSON string — the previous round's bench_full.json is
-    * engine-written (flat, known shape), so a full parser would be
-    * dead weight; string contents (error messages) are skipped
-    * correctly so a brace inside a message can't derail the match. */
-  private def extractObject(json: String, key: String): Option[String] = {
-    val k = "\"" + key + "\":"
-    val i = json.indexOf(k)
-    if (i < 0) return None
-    var j = i + k.length
-    if (j >= json.length || json(j) != '{') return None
-    val start = j
-    var depth = 0
-    var inStr = false
-    var esc = false
-    while (j < json.length) {
-      val c = json(j)
-      if (inStr) {
-        if (esc) esc = false
-        else if (c == '\\') esc = true
-        else if (c == '"') inStr = false
-      } else c match {
-        case '"' => inStr = true
-        case '{' => depth += 1
-        case '}' =>
-          depth -= 1
-          if (depth == 0) return Some(json.substring(start, j + 1))
-        case _ => ()
-      }
-      j += 1
-    }
-    None
-  }
+  private val mapper = new ObjectMapper()
 
-  /** All `"name": number` entries of a flat JSON object — nulls and
-    * strings simply don't match, which is the desired skip. */
-  private def numberEntries(obj: String): Map[String, Double] =
-    """"([^"]+)"\s*:\s*(-?[0-9][0-9.eE+\-]*)""".r.findAllMatchIn(obj)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+  private def putOpt(o: ObjectNode, k: String, v: Option[Double]): ObjectNode =
+    v.fold(o.putNull(k))(o.put(k, _))
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  /** The numeric fields of a JSON object; nulls and strings are skipped. */
+  private def numbers(o: JsonNode): Map[String, Double] =
+    o.properties().asScala.collect {
+      case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+    }.toMap
 
   def main(args: Array[String]): Unit = {
     val sfDir = Conf.Env.sfDir
@@ -313,10 +277,6 @@ object Bench {
     // (it did, every round up to r6). The stdout line keeps the slowest
     // queries (the ones that matter for perf ranking) under a hard
     // budget and points at the file holding the rest.
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val errJson = errors
-      .collect { case (k, Some(e)) => "\"" + k + "\":" + jsonStr(e) }
-      .mkString("{", ",", "}")
     // a FILTERED run must not clobber the tracked full-catalog
     // snapshot — a "bench_full.json" holding 3 probe queries is
     // exactly the healthy-looking-partial-run failure the name-check
@@ -324,21 +284,6 @@ object Bench {
     val fullPath =
       if (Conf.Env.queryFilter.isEmpty) "bench_full.json"
       else "bench_subset.json"
-    val phasesJson = phased
-      .map {
-        case (k, Right((b, sv))) =>
-          "\"" + k + "\":{\"build\":" + b + ",\"serve\":" + sv + "}"
-        case (k, Left(err)) =>
-          "\"" + k + "\":{\"error\":" + jsonStr(err) + "}"
-      }
-      .mkString("{", ",", "}")
-    def numOrNull(v: Option[Double]): String =
-      v.map(_.toString).getOrElse("null")
-    val canaryJson =
-      s"""{"start":${numOrNull(canaryStart)},"end":${numOrNull(canaryEnd)}}"""
-    val warmErrJson = warmErrors
-      .map { case (k, e) => "\"" + k + "\":" + jsonStr(e) }
-      .mkString("{", ",", "}")
     // SELF-ADJUDICATION vs the previous round's full artifact (VERDICT
     // r18 item 5): the ratio-distribution-vs-canary-drift analysis
     // that adjudicated every round's movers in BENCH_SCALE prose
@@ -350,28 +295,23 @@ object Bench {
     // whatever queries it shares.
     val prevPath = sys.env.get("SPARK_GRAFT_PREV_BENCH")
       .filter(_.nonEmpty).getOrElse("bench_prev.json")
-    val adjJson: String = (try {
+    val adj: Option[ObjectNode] = try {
       val f = new java.io.File(prevPath)
       if (!f.isFile) None
       else {
-        val prev = new String(
-          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        val prev = mapper.readTree(f)
         // ratios against a different scale factor are fiction — only
         // adjudicate a same-sf pair (the driver's round-over-round
         // comparison is sf0.1 vs sf0.1)
-        val prevSf = """"sf"\s*:\s*"([^"]*)"""".r
-          .findFirstMatchIn(prev).map(_.group(1))
-        if (!prevSf.contains(sfDir)) None
+        if (prev.path("sf").asText() != sfDir) None
         else {
-        val prevQs = extractObject(prev, "queries")
-          .map(numberEntries).getOrElse(Map.empty)
+        val prevQs = numbers(prev.path("queries"))
         def meanPos(xs: Iterable[Double]): Option[Double] = {
           val p = xs.filter(_ > 0)
           if (p.isEmpty) None else Some(p.sum / p.size)
         }
         // -1.0 sentinels in pre-r19 files and nulls both drop out here
-        val prevC = meanPos(extractObject(prev, "canary")
-          .map(numberEntries).getOrElse(Map.empty).values)
+        val prevC = meanPos(numbers(prev.path("canary")).values)
         val thisC = meanPos(Seq(canaryStart, canaryEnd).flatten)
         val scaled = for (p <- prevC; t <- thisC)
           yield total * (p / t)
@@ -384,45 +324,67 @@ object Bench {
         val histEdges = Seq(0.75, 0.9, 1.1, 1.25, 1.5, 2.0)
         val histLabels = ("lt0.75" +: histEdges.zip(histEdges.drop(1))
           .map { case (a, b) => s"$a-$b" }) :+ "ge2.0"
-        val counts = histLabels.zipWithIndex.map { case (lbl, i) =>
-          val n = ratios.count { case (_, r) =>
+        val maxEntry = ratios.lastOption
+        val o = mapper.createObjectNode()
+        o.put("prev", prevPath).put("n_shared", ratios.size)
+        putOpt(o, "prev_canary", prevC)
+        putOpt(o, "this_canary", thisC)
+        putOpt(o, "canary_scaled_total", scaled)
+        putOpt(o, "ratio_median", pct(0.5))
+        putOpt(o, "ratio_p10", pct(0.1))
+        putOpt(o, "ratio_p90", pct(0.9))
+        putOpt(o, "ratio_max", maxEntry.map(_._2))
+        maxEntry.fold(o.putNull("ratio_max_query"))(e => o.put("ratio_max_query", e._1))
+        val hist = o.putObject("ratio_hist")
+        histLabels.zipWithIndex.foreach { case (lbl, i) =>
+          hist.put(lbl, ratios.count { case (_, r) =>
             (i == 0 && r < histEdges.head) ||
               (i == histLabels.size - 1 && r >= histEdges.last) ||
               (i > 0 && i < histLabels.size - 1 &&
                 r >= histEdges(i - 1) && r < histEdges(i))
-          }
-          "\"" + lbl + "\":" + n
-        }.mkString("{", ",", "}")
-        val maxEntry = ratios.lastOption
-        Some(s"""{"prev":${jsonStr(prevPath)},"n_shared":${ratios.size},""" +
-          s""""prev_canary":${numOrNull(prevC)},"this_canary":${numOrNull(thisC)},""" +
-          s""""canary_scaled_total":${numOrNull(scaled)},""" +
-          s""""ratio_median":${numOrNull(pct(0.5))},"ratio_p10":${numOrNull(pct(0.1))},""" +
-          s""""ratio_p90":${numOrNull(pct(0.9))},""" +
-          s""""ratio_max":${numOrNull(maxEntry.map(_._2))},""" +
-          s""""ratio_max_query":${maxEntry.map(e => jsonStr(e._1)).getOrElse("null")},""" +
-          s""""ratio_hist":$counts}""")
+          })
+        }
+        Some(o)
         }
       }
-    } catch { case scala.util.control.NonFatal(_) => None })
-      .getOrElse("null")
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$errJson,"n_err":$nErr,"warm_errors":$warmErrJson,"phases":$phasesJson,"canary":$canaryJson,"adjudication":$adjJson,"sf":"$sfDir","reps":${math.max(1, reps)},"cpus":$cpus}"""
+    } catch { case scala.util.control.NonFatal(_) => None }
+    val full = mapper.createObjectNode()
+    full.put("metric", "total").put("value", total).put("unit", "sec")
+    val fullQs = full.putObject("queries")
+    results.foreach { case (k, v) => fullQs.put(k, v) }
+    val errJson = full.putObject("errors")
+    errors.foreach { case (k, e) => e.foreach(errJson.put(k, _)) }
+    full.put("n_err", nErr)
+    val warmErrJson = full.putObject("warm_errors")
+    warmErrors.foreach { case (k, e) => warmErrJson.put(k, e) }
+    val phasesJson = full.putObject("phases")
+    phased.foreach {
+      case (k, Right((b, sv))) => phasesJson.putObject(k).put("build", b).put("serve", sv)
+      case (k, Left(err)) => phasesJson.putObject(k).put("error", err)
+    }
+    putOpt(putOpt(full.putObject("canary"), "start", canaryStart), "end", canaryEnd)
+    adj.fold(full.putNull("adjudication"))(full.set[ObjectNode]("adjudication", _))
+    full.put("sf", sfDir).put("reps", math.max(1, reps)).put("cpus", cpus)
     try {
       val w = new java.io.PrintWriter(fullPath, "UTF-8")
-      try w.println(full) finally w.close()
+      try w.println(mapper.writeValueAsString(full)) finally w.close()
     } catch { case _: Throwable => () }
-    def round3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val bySlowest = results.sortBy(-_._2)
-    val budget = 1500 // chars for the queries map; total line stays < ~1800
-    val kept = new StringBuilder
+    def round3(v: Double): Double =
+      BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val line = mapper.createObjectNode()
+    line.put("metric", "total").put("value", round3(total)).put("unit", "sec")
+    val kept = line.putObject("queries")
     var omitted = 0
-    bySlowest.foreach { case (k, v) =>
-      val piece = (if (kept.isEmpty) "" else ",") + "\"" + k + "\":" + round3(v)
-      if (kept.length + piece.length <= budget) kept.append(piece) else omitted += 1
+    results.sortBy(-_._2).foreach { case (k, v) =>
+      kept.put(k, round3(v))
+      // budget: 1500 chars inside the queries map; total line stays < ~1800
+      if (mapper.writeValueAsString(kept).length > 1502) { kept.remove(k); omitted += 1 }
     }
-    def round3OrNull(v: Option[Double]): String =
-      v.map(round3).getOrElse("null")
-    println(s"""{"metric":"total","value":${round3(total)},"unit":"sec","queries":{${kept.result()}},"queries_omitted":$omitted,"full":"$fullPath","n_err":$nErr,"canary":{"start":${round3OrNull(canaryStart)},"end":${round3OrNull(canaryEnd)}},"sf":"$sfDir","reps":${math.max(1, reps)},"cpus":$cpus}""")
+    line.put("queries_omitted", omitted).put("full", fullPath).put("n_err", nErr)
+    putOpt(putOpt(line.putObject("canary"), "start", canaryStart.map(round3)),
+      "end", canaryEnd.map(round3))
+    line.put("sf", sfDir).put("reps", math.max(1, reps)).put("cpus", cpus)
+    println(mapper.writeValueAsString(line))
     spark.stop()
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** Thin HTTP serving shell — the engine-side mirror of the reference's
   * FastAPI app (`app.py:1-13`, `text_processing.py:143-177`). DRIVER
@@ -69,7 +70,7 @@ object Serve {
         reports.foreach(r => rows.addObject().put("report", r.getString(1)))
         respond(ex, 200, mapper.writeValueAsString(root))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           val root = mapper.createObjectNode()
           root.put("detail", Option(e.getMessage).getOrElse(e.getClass.getName))
           respond(ex, 500, mapper.writeValueAsString(root))

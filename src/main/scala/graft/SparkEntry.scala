@@ -1,4 +1,5 @@
 package graft
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{SparkSession, DataFrame}
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -782,20 +783,18 @@ object SparkEntry {
             ops.Entity.canonicalLoadMap(s, ops.IndexPaths.dir("p09_map", d))))),
       "er10_delta_canonicalize" -> ((
         (s: SparkSession, d: String) => {
-          graft.functions.VectorFunctions.register(s)
           val standing = ops.Tables.part(s, d)
-            .filter(expr("graft_polyhash(p_name) % 4") =!= 3)
+            .filter((polyHash(col("p_name")) % 4) =!= 3)
           ops.Entity.canonicalWriteMap(
             ops.Entity.canonicalMapFromPairs(standing, "p_name",
               ops.Entity.jaroWinklerPairsUnion(standing, "p_name")),
             ops.IndexPaths.dir("er10_map", d))
         },
         (s: SparkSession, d: String) => {
-          graft.functions.VectorFunctions.register(s)
           val part = ops.Tables.part(s, d)
           ops.Entity.deltaCanonicalize(
-            part.filter(expr("graft_polyhash(p_name) % 4") =!= 3),
-            part.filter(expr("graft_polyhash(p_name) % 4").isin(2, 3)),
+            part.filter((polyHash(col("p_name")) % 4) =!= 3),
+            part.filter((polyHash(col("p_name")) % 4).isin(2, 3)),
             "p_name",
             ops.Entity.canonicalLoadMap(s, ops.IndexPaths.dir("er10_map", d)))
         })),

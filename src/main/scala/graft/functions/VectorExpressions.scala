@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -254,56 +253,5 @@ object Jaro {
       while (l < n && s1.charAt(l) == s2.charAt(l)) l += 1
       j0 + l * 0.1 * (1 - j0)
     } else j0
-  }
-}
-
-/** Session registration for the graft native functions. Idempotent —
-  * call from any query that uses them. Re-registration is a no-op
-  * (guarded on the registry itself, so it survives session cloning):
-  * without the guard every catalog query re-replaces all six
-  * functions and Spark logs a "replacing temp function" warning per
-  * call — thousands of them over a bench run. */
-object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot")))
-      return
-    reg.createOrReplaceTempFunction(
-      "graft_dot",
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_polyhash",
-      (exprs: Seq[Expression]) => PolyHash(exprs.head),
-      "built-in")
-    // the token-window hash family takes its small-int parameters as
-    // foldable literals, resolved at registration into case-class params
-    def lit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      (exprs: Seq[Expression]) =>
-        ShingleHashes(exprs.head, lit(exprs(1)), lit(exprs(2)) != 0),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash",
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head, lit(exprs(1))),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash",
-      (exprs: Seq[Expression]) => SimHash(exprs.head),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_inter_count",
-      (exprs: Seq[Expression]) => SortedInterCount(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_token_counts",
-      (exprs: Seq[Expression]) => TokenCounts(exprs.head),
-      "built-in")
   }
 }

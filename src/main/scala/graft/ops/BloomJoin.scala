@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * Spark ships its own runtime bloom (`spark.sql.optimizer.runtime.
   * bloomFilter.enabled`, injected by the optimizer when statistics
   * justify it); this operator is the explicit, engine-portable form:
-  * every bit derives from [[Hashing.polyHash]] + affine maps mod P, so
-  * any engine — and the DuckDB oracle — can reproduce the exact filter.
+  * every bit derives from [[graft.functions.GraftFunctions.polyHash]] +
+  * affine maps mod P, so any engine — and the DuckDB oracle — can
+  * reproduce the exact filter.
   *
   * Build shape: each dim key maps to k (word, mask) pairs, `bit_or`
   * aggregated per word — mergeable partials, a shuffle of at most
@@ -48,7 +49,6 @@ object BloomJoin {
     * broadcast build). */
   def buildBitmap(dim: DataFrame, dimKey: String,
                   bits: Int = Bits, k: Int = K): Array[Long] = {
-    graft.functions.VectorFunctions.register(dim.sparkSession)
     // NULL dim keys can never match a semi-join, and graft_polyhash(null)
     // would propagate a null word index into getInt below — drop them
     // before hashing (keeps bitmap build ≡ left_semi exactly).
@@ -71,7 +71,6 @@ object BloomJoin {
   def bloomSemiJoin(fact: DataFrame, dim: DataFrame,
                     factKey: String, dimKey: String,
                     bits: Int = Bits, k: Int = K): DataFrame = {
-    graft.functions.VectorFunctions.register(fact.sparkSession)
     val words = buildBitmap(dim, dimKey, bits, k)
     val bitmap = typedLit(words.toSeq)
     val passes = (0 until k).map { i =>

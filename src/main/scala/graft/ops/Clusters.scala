@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -583,15 +584,14 @@ object Clusters {
     * Output: `(vec_id, cluster, is_dup)` — one row per vector. */
   def semanticDedup(vectors: DataFrame, id: String, vec: String,
                     k: Int, iters: Int, tau: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val assign = Similarity.kmeansAssign(vectors, id, vec, k, iters)
     val v = vectors.select(col(id).as("vec_id"),
         expr(s"transform($vec, x -> cast(x as double))").as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .join(assign, "vec_id")
     val dups = v.as("a").join(v.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.vec_id") < col("b.vec_id"))
-      .filter(expr("graft_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")) >= tau)
+      .filter(dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")) >= tau)
       .select(col("b.vec_id").as("vec_id")).distinct()
     v.select(col("vec_id"), col("cluster"))
       .join(dups.withColumn("_d", lit(true)), Seq("vec_id"), "left")

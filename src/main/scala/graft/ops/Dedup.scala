@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    run once (not once per self-join side);
   *  - a document-frequency cap ([[MaxShingleDf]]) bounds the O(df²)
   *    blow-up of ultra-common shingles;
-  *  - hashes are the engine-portable [[Hashing.polyHash]], so the
-  *    driver's oracle reproduces every intermediate value bit-for-bit;
+  *  - hashes are the engine-portable
+  *    [[graft.functions.GraftFunctions.polyHash]], so the driver's
+  *    oracle reproduces every intermediate value bit-for-bit;
   *  - the only O(n²) operator is the brute-force cosine near-dup — the
   *    correctness baseline whose scale path is [[Similarity]]'s LSH/IVF
   *    bucketing.
@@ -84,7 +86,8 @@ object Dedup {
     * corpus scale (50% by ~50k distinct shingles), while 60 bits holds
     * to billions; a collision only ever inflates `inter` by 1 for one
     * candidate pair. Both hashes are the engine-portable
-    * [[Hashing.polyHash]], so the oracle reproduces the exact buckets. */
+    * [[graft.functions.GraftFunctions.polyHash]], so the oracle
+    * reproduces the exact buckets. */
   def jaccardPairs(docs: DataFrame, id: String, text: String,
                    threshold: Double, n: Int = 3,
                    maxDf: Int = MaxShingleDf): DataFrame =
@@ -114,12 +117,11 @@ object Dedup {
   private def undirectedIntersections(docs: DataFrame, id: String,
                                       text: String, n: Int,
                                       maxDf: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val sh = docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), expr(s"graft_shingle_hashes(tk, $n, 1)").as("hs"))
+      .select(col("doc_id"), shingleHashes(col("tk"), n).as("hs"))
       .select(col("doc_id"), size(col("hs")).cast("long").as("n_sh"),
         explode(col("hs")).as("shingle"))
     // one pass: group (doc, n_sh) structs per shingle, expand in-bucket
@@ -270,12 +272,11 @@ object Dedup {
   def jaccardPairsPrefix(docs: DataFrame, id: String, text: String,
                          threshold: Double, n: Int = 3,
                          maxDf: Int = MaxShingleDf): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val arr = docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), expr(s"graft_shingle_hashes(tk, $n, 1)").as("hs"))
+      .select(col("doc_id"), shingleHashes(col("tk"), n).as("hs"))
       .select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("n_sh"))
     val pre = arr.select(col("doc_id"), col("n_sh"),
       explode(expr(
@@ -307,7 +308,7 @@ object Dedup {
       .join(arr.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), Seq("doc_b"))
       .crossJoin(broadcast(capped))
       .withColumn("inter",
-        expr("graft_inter_count(array_except(hs_a, capped_hs), hs_b)"))
+        interCount(array_except(col("hs_a"), col("capped_hs")), col("hs_b")))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -326,12 +327,11 @@ object Dedup {
     * against. */
   private def minhashSignatures(docs: DataFrame, id: String, text: String,
                                 n: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), expr(s"graft_minhash(tk, $n)").as("mh"))
+      .select(col("doc_id"), minHash(col("tk"), n).as("mh"))
   }
 
   /** Band-bucket guard for LOW-DIVERSITY shingle regimes: a band key
@@ -414,7 +414,6 @@ object Dedup {
     * not an extra copy. */
   def minhashVerifiedPairsFromArtifacts(art: DataFrame, threshold: Double,
                                         maxBandDocs: Int = Int.MaxValue): DataFrame = {
-    graft.functions.VectorFunctions.register(art.sparkSession)
     val bands = bandRowsFromSignatures(art.select(col("doc_id"), col("mh")))
     val cand = expandPairs(
       bands.groupBy(col("band"), col("key"))
@@ -428,7 +427,7 @@ object Dedup {
       .join(arr.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
         size(col("hs")).cast("long").as("n_b")), Seq("doc_b"))
       .withColumn("inter",
-        expr("graft_inter_count(hs_a, hs_b)"))
+        interCount(col("hs_a"), col("hs_b")))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -761,14 +760,13 @@ object Dedup {
     * section). */
   def minhashDocArtifacts(docs: DataFrame, id: String, text: String,
                           n: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
       .select(col("doc_id"),
-        expr(s"graft_shingle_hashes(tk, $n, 1)").as("hs"),
-        expr(s"graft_minhash(tk, $n)").as("mh"))
+        shingleHashes(col("tk"), n).as("hs"),
+        minHash(col("tk"), n).as("mh"))
   }
 
   /** Serve a DELTA batch against a standing corpus's band table —
@@ -806,7 +804,6 @@ object Dedup {
                             delta: DataFrame, id: String, text: String,
                             threshold: Double, n: Int = 3,
                             maxBandDocs: Int = Int.MaxValue): DataFrame = {
-    graft.functions.VectorFunctions.register(delta.sparkSession)
     // the bucket-cap gate as a WINDOW count (r19, guide §2.4): the
     // groupBy + left_semi form scanned the standing band table twice
     // and paid two exchanges (the bdf aggregate plus the semi-join's
@@ -848,7 +845,7 @@ object Dedup {
             size(col("hs")).cast("long").as("n_b")),
         Seq("delta_id"))
       .withColumn("inter",
-        expr("graft_inter_count(hs_a, hs_b)"))
+        interCount(col("hs_a"), col("hs_b")))
       .withColumn("jaccard", col("inter").cast("double") /
         (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
@@ -861,12 +858,11 @@ object Dedup {
     * the p05 publisher can persist it beside the signatures/bands. */
   def shingleHashArrays(docs: DataFrame, id: String, text: String,
                         n: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), expr(s"graft_shingle_hashes(tk, $n, 1)").as("hs"))
+      .select(col("doc_id"), shingleHashes(col("tk"), n).as("hs"))
   }
 
   /** PERSIST the standing corpus's MinHash index (d19) as two parquet
@@ -977,7 +973,6 @@ object Dedup {
   def minhashServeIncremental(spark: SparkSession, delta: DataFrame,
                               id: String, text: String, threshold: Double,
                               dir: String, n: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     // minhashLoadIndex verifies the store's mhVersion stamp — the
     // hashes/labels tables below ride the same stamped publish
     val (_, bands) = minhashLoadIndex(spark, dir, n)
@@ -1009,7 +1004,7 @@ object Dedup {
         .join(withSizes(left, a, "hs_a", "n_a"), Seq(a))
         .join(withSizes(right, b, "hs_b", "n_b"), Seq(b))
         .withColumn("inter",
-          expr("graft_inter_count(hs_a, hs_b)"))
+          interCount(col("hs_a"), col("hs_b")))
         .filter(col("inter").cast("double") /
           (col("n_a") + col("n_b") - col("inter")).cast("double")
           >= threshold)
@@ -1119,13 +1114,12 @@ object Dedup {
   def semanticDecontaminate(corpus: DataFrame, probe: DataFrame,
                             id: String, vec: String,
                             threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val c = corpus.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val b = probe.select(col(id).as("bench_id"), col(vec).as("pv"))
-      .withColumn("pnrm", expr("sqrt(graft_dot(pv, pv))"))
+      .withColumn("pnrm", sqrt(dot(col("pv"), col("pv"))))
     c.crossJoin(broadcast(b))
-      .withColumn("cos", expr("graft_dot(v, pv)") / (col("nrm") * col("pnrm")))
+      .withColumn("cos", dot(col("v"), col("pv")) / (col("nrm") * col("pnrm")))
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_bench_matches"), max(col("cos")).as("max_cos"))
@@ -1153,33 +1147,32 @@ object Dedup {
                                id: String, vec: String, threshold: Double,
                                planes: Int = Similarity.NumPlanes,
                                dims: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     def bucketed(df: DataFrame, idOut: String, vOut: String,
                  nrmOut: String): DataFrame =
       df.select(col(id).as(idOut), col(vec).as(vOut))
-        .withColumn(nrmOut, expr(s"sqrt(graft_dot($vOut, $vOut))"))
+        .withColumn(nrmOut, sqrt(dot(col(vOut), col(vOut))))
         .withColumn("bucket", hyperplaneBucket(vOut, 0, planes, dims))
     bucketed(corpus, "vec_id", "v", "nrm")
       .join(bucketed(probe, "bench_id", "pv", "pnrm"), Seq("bucket"))
-      .withColumn("cos", expr("graft_dot(v, pv)") / (col("nrm") * col("pnrm")))
+      .withColumn("cos", dot(col("v"), col("pv")) / (col("nrm") * col("pnrm")))
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_bench_matches"), max(col("cos")).as("max_cos"))
   }
 
-  /** The d07/d26 random-hyperplane bucket of vector column `vExpr`,
+  /** The d07/d26 random-hyperplane bucket of vector column `vCol`,
     * for PLANE SET `set`: sign bits of `planes` integer-LCG
     * hyperplanes, set `s` drawing planes `s·planes … s·planes+planes−1`
     * from [[Similarity.weight]]'s deterministic matrix — so set 0 is
     * exactly d26's single bucket and higher sets are independent
     * draws of the same family. */
-  private def hyperplaneBucket(vExpr: String, set: Int, planes: Int,
+  private def hyperplaneBucket(vCol: String, set: Int, planes: Int,
                                dims: Int): Column =
     (0 until planes).map { i =>
       val w = (0 until dims)
         .map(j => s"${Similarity.weight(set * planes + i, j, dims)}D")
         .mkString(", ")
-      when(expr(s"graft_dot($vExpr, array($w))") > 0d, 1 << i).otherwise(0)
+      when(dot(col(vCol), expr(s"array($w)")) > 0d, 1 << i).otherwise(0)
     }.reduce(_ + _)
 
   /** How many independent plane sets [[semanticDecontaminateLshMulti]]
@@ -1224,7 +1217,6 @@ object Dedup {
                                     dims: Int = 64,
                                     maxBucketDocs: Int = 0): DataFrame = {
     require(sets >= 1, "at least one plane set")
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     semanticMultiProbeServe(
       multiProbeBuckets(corpus, id, vec, "vec_id", planes, sets, dims)
         .localCheckpoint(),
@@ -1295,13 +1287,13 @@ object Dedup {
         .select(col("vec_id"), col("bench_id"))
     }.reduce(_.unionByName(_)).distinct()
     val cv = corpus.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val bv = probe.select(col(id).as("bench_id"), col(vec).as("pv"))
-      .withColumn("pnrm", expr("sqrt(graft_dot(pv, pv))"))
+      .withColumn("pnrm", sqrt(dot(col("pv"), col("pv"))))
     cand
       .join(cv, Seq("vec_id"))
       .join(bv, Seq("bench_id"))
-      .withColumn("cos", expr("graft_dot(v, pv)") / (col("nrm") * col("pnrm")))
+      .withColumn("cos", dot(col("v"), col("pv")) / (col("nrm") * col("pnrm")))
       .filter(col("cos") >= threshold)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_bench_matches"), max(col("cos")).as("max_cos"))
@@ -1344,7 +1336,6 @@ object Dedup {
                            planes: Int = Similarity.NumPlanes,
                            sets: Int = NumPlaneSets,
                            dims: Int = 64): Unit = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     IndexMeta.unstamp(dir)
     multiProbeBuckets(corpus, id, vec, "vec_id", planes, sets, dims)
       .write.mode("overwrite").parquet(s"$dir/buckets")
@@ -1367,7 +1358,6 @@ object Dedup {
                             planes: Int = Similarity.NumPlanes,
                             sets: Int = NumPlaneSets,
                             dims: Int = 64): Unit = {
-    graft.functions.VectorFunctions.register(delta.sparkSession)
     IndexMeta.checkVersion(dir, hplshVersion(planes, sets, dims))
     IndexMeta.unstamp(dir)
     multiProbeBuckets(delta, id, vec, "vec_id", planes, sets, dims)
@@ -1469,7 +1459,6 @@ object Dedup {
                                      planes: Int = Similarity.NumPlanes,
                                      sets: Int = NumPlaneSets,
                                      dims: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val cb0 = semanticBucketsLoad(spark, dir, planes, sets, dims)
     val cb = tombstones.fold(cb0)(t =>
       cb0.join(broadcast(t.select(col("vec_id")).distinct()),
@@ -1481,11 +1470,10 @@ object Dedup {
   def contaminationHits(corpus: DataFrame, id: String, text: String,
                         probe: DataFrame, probeText: String,
                         n: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val probeSet = probe
       .select(expr(s"filter(split($probeText, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(explode(expr(s"graft_shingle_hashes(tk, $n, 1)")).as("sk"))
+      .select(explode(shingleHashes(col("tk"), n)).as("sk"))
       .distinct()
     // graft_shingle_hashes already dedups within a doc, so (doc_id, sk)
     // is distinct without a shuffle
@@ -1493,7 +1481,7 @@ object Dedup {
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
-      .select(col("doc_id"), explode(expr(s"graft_shingle_hashes(tk, $n, 1)")).as("sk"))
+      .select(col("doc_id"), explode(shingleHashes(col("tk"), n)).as("sk"))
     corpusSh.join(broadcast(probeSet), Seq("sk"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
   }
@@ -1588,15 +1576,14 @@ object Dedup {
                                     threshold: Double,
                                     n: Int = CjkCharShingleN,
                                     maxBandDocs: Int = MaxBandDocs): DataFrame = {
-    graft.functions.VectorFunctions.register(corpusToks.sparkSession)
     // one corpus scan → (corpus_id, hs, mh); bands + gate + verify all
     // read this checkpoint
     val cart = corpusToks
       .select(col("doc_id"), expr("filter(toks, x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
       .select(col("doc_id").as("corpus_id"),
-        expr(s"graft_shingle_hashes(tk, $n, 1)").as("hs"),
-        expr(s"graft_minhash(tk, $n)").as("mh"))
+        shingleHashes(col("tk"), n).as("hs"),
+        minHash(col("tk"), n).as("mh"))
       .localCheckpoint()
     // narrow checkpoint: the band table feeds BOTH the bucket-cap
     // gate's count and the candidate join, and the fat (hs) checkpoint
@@ -1629,12 +1616,11 @@ object Dedup {
     * the relational form (explode of an empty array yields no rows).
     * Output: `(doc_id, simhash)`. */
   def simhash(docs: DataFrame, id: String, text: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) > 0)
-      .select(col("doc_id"), expr("graft_simhash(tk)").as("simhash"))
+      .select(col("doc_id"), simHash(col("tk")).as("simhash"))
   }
 
   /** SimHash near-dup PAIRS (d13) — the operator [[simhash]]'s
@@ -1698,12 +1684,11 @@ object Dedup {
     * scale via [[Similarity]]. Output: `(vec_a, vec_b, cos)`. */
   def cosineNearDup(vectors: DataFrame, id: String, vec: String,
                     threshold: Double): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val v = vectors
       .select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     v.as("a").join(v.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", expr("graft_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")))
+      .withColumn("cos", dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
       .filter(col("cos") >= threshold)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("cos"))
   }
@@ -1725,18 +1710,17 @@ object Dedup {
   def cosineNearDupLsh(vectors: DataFrame, id: String, vec: String,
                        threshold: Double, planes: Int = Similarity.NumPlanes,
                        dims: Int = 64): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val bitCols = (0 until planes).map { i =>
       val w = (0 until dims).map(j => s"${Similarity.weight(i, j, dims)}D").mkString(", ")
-      when(expr(s"graft_dot(v, array($w))") > 0d, 1 << i).otherwise(0)
+      when(dot(col("v"), expr(s"array($w)")) > 0d, 1 << i).otherwise(0)
     }
     val v = vectors
       .select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .withColumn("bucket", bitCols.reduce(_ + _))
     v.as("a").join(v.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", expr("graft_dot(a.v, b.v)") / (col("a.nrm") * col("b.nrm")))
+      .withColumn("cos", dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm")))
       .filter(col("cos") >= threshold)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"), col("cos"))
   }
@@ -1766,7 +1750,6 @@ object Dedup {
                             dims: Int = 64,
                             maxBucketDocs: Int = 0): DataFrame = {
     require(sets >= 1, "at least one plane set")
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val bk = multiProbeBuckets(vectors, id, vec, "vec_id", planes, sets, dims)
       .localCheckpoint()
     // `maxBucketDocs` (0 = off) is the deployment cap the r19 sf10
@@ -1799,13 +1782,13 @@ object Dedup {
         .select(col("vec_a"), col("vec_b"))
     }.reduce(_.unionByName(_)).distinct()
     val v = vectors.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     cand
       .join(v.select(col("vec_id").as("vec_a"), col("v").as("va"),
         col("nrm").as("na")), Seq("vec_a"))
       .join(v.select(col("vec_id").as("vec_b"), col("v").as("vb"),
         col("nrm").as("nb")), Seq("vec_b"))
-      .withColumn("cos", expr("graft_dot(va, vb)") / (col("na") * col("nb")))
+      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }
@@ -1840,7 +1823,6 @@ object Dedup {
     * readability). Output: `(doc_id, n_grams, n_dup_grams, dup_frac)`. */
   def dupNgramStats(docs: DataFrame, id: String, text: String,
                     n: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     // eager checkpoint: both consumers sit in ONE action's DAG, so a
     // lazy mark would let their racing tasks each compute partitions
     val base = docs
@@ -1852,7 +1834,7 @@ object Dedup {
         s"i -> concat_ws(' ', ${(0 until n).map(j => s"tk[i+$j]").mkString(", ")}))")
         .as("grams"))
       .select(col("doc_id"),
-        expr("graft_token_counts(grams)").as("tcs"),
+        tokenCounts(col("grams")).as("tcs"),
         size(col("grams")).cast("long").as("n_grams"))
       .localCheckpoint()
     val perDocGram = base
@@ -1896,7 +1878,6 @@ object Dedup {
     * `exists` ≡ `len(list_filter(…)) > 0`. */
   def scrubDupSpans(docs: DataFrame, id: String, text: String,
                     n: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val base = docs.select(col(id).as("doc_id"),
       expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
     val winStr = (0 until n).map(j => s"tk[i + ${j - 1}]").mkString(", ")
@@ -1920,7 +1901,7 @@ object Dedup {
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("n_tokens"),
         size(col("kept")).cast("long").as("n_kept"),
-        expr("graft_polyhash(concat_ws(' ', transform(kept, t -> element_at(tk, t))))")
+        polyHash(expr("concat_ws(' ', transform(kept, t -> element_at(tk, t)))"))
           .as("clean_hash"))
   }
 
@@ -1962,7 +1943,7 @@ object Dedup {
         s"i -> array_join(slice(ws, i * $segWords + 1, $segWords), ' '))"))
         .as(Seq("seg_idx", "seg")))
       .select(col(id), col("seg_idx").cast("long").as("seg_idx"), col("seg"),
-        Hashing.polyHash("seg").as("h"))
+        polyHash(col("seg")).as("h"))
     val keeper = segs.groupBy(col("h"))
       .agg(min(struct(col(id), col("seg_idx"))).as("_k"))
     segs.join(keeper, Seq("h"))
@@ -1981,10 +1962,8 @@ object Dedup {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d01_exact_dedup" -> ((s, d) =>
       exactDedup(Tables.documents(s, d), "doc_id", "text")),
-    "d16_line_dedup" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
-      lineDedup(Tables.documents(s, d), "doc_id", "text")
-    }),
+    "d16_line_dedup" -> ((s, d) =>
+      lineDedup(Tables.documents(s, d), "doc_id", "text")),
     "d14_normalized_dedup" -> ((s, d) =>
       exactDedupNormalized(Tables.documents(s, d), "doc_id", "text")),
     // d22 harness: odd docs re-typed through "full-width mode" (the

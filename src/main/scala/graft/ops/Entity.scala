@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,14 +95,13 @@ object Entity {
   def jaroWinklerPairs(df: DataFrame, name: String,
                        minJwQ6: Long = MinJwQ6,
                        maxBlock: Int = MaxBlock): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val n = blockedNames(df, name, maxBlock)
     val a = n.select(col("name").as("name_a"), col("blk"))
     val b = n.select(col("name").as("name_b"), col("blk"))
     a.join(b, Seq("blk"))
       .filter(col("name_a") < col("name_b"))
       .withColumn("jw_q6",
-        round(expr("graft_jaro_winkler(name_a, name_b)") * lit(1e6))
+        round(jaroWinkler(col("name_a"), col("name_b")) * lit(1e6))
           .cast("long"))
       .filter(col("jw_q6") >= minJwQ6)
       .select(col("name_a"), col("name_b"), col("jw_q6"))
@@ -123,12 +123,11 @@ object Entity {
     * last-token pairs, er08's union-blocked pairs). */
   def canonicalMapFromPairs(df: DataFrame, name: String,
                             pairs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val names = df.select(col(name).as("name")).distinct()
-      .withColumn("h", expr("graft_polyhash(name)"))
+      .withColumn("h", polyHash(col("name")))
     val hPairs = pairs
-      .withColumn("ha", expr("graft_polyhash(name_a)"))
-      .withColumn("hb", expr("graft_polyhash(name_b)"))
+      .withColumn("ha", polyHash(col("name_a")))
+      .withColumn("hb", polyHash(col("name_b")))
     val cc = Clusters.connectedComponents(hPairs, "ha", "hb")
       .select(col("doc_id").as("h"), col("cluster_id"))
     val labeled = names.join(cc, Seq("h"), "left")
@@ -153,14 +152,13 @@ object Entity {
   def jaroWinklerPairsUnion(df: DataFrame, name: String,
                             minJwQ6: Long = MinJwQ6,
                             maxBlock: Int = MaxBlock): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val n = unionBlockedNames(df, name, maxBlock)
     n.select(col("name").as("name_a"), col("blk"))
       .join(n.select(col("name").as("name_b"), col("blk")), Seq("blk"))
       .filter(col("name_a") < col("name_b"))
       .select(col("name_a"), col("name_b")).distinct()
       .withColumn("jw_q6",
-        round(expr("graft_jaro_winkler(name_a, name_b)") * lit(1e6))
+        round(jaroWinkler(col("name_a"), col("name_b")) * lit(1e6))
           .cast("long"))
       .filter(col("jw_q6") >= minJwQ6)
       .select(col("name_a"), col("name_b"), col("jw_q6"))
@@ -268,7 +266,6 @@ object Entity {
   def blockingAuditOf(df: DataFrame, name: String, blocked: DataFrame,
                       minJwQ6: Long = MinJwQ6,
                       sampleMod: Long = SampleMod): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val names = df.select(col(name).as("name")).distinct()
     val nNames = names.agg(count(lit(1)).as("n_names"))
     val cPairs = blocked.as("a")
@@ -278,11 +275,11 @@ object Entity {
       .distinct()
     val nCand = cPairs.agg(count(lit(1)).as("n_cand"))
     val samp = names
-      .filter(expr(s"graft_polyhash(name) % $sampleMod") === 0L)
+      .filter(polyHash(col("name")) % sampleMod === 0L)
     val sTrue = samp.select(col("name").as("na"))
       .crossJoin(broadcast(samp.select(col("name").as("nb"))))
       .filter(col("na") < col("nb"))
-      .filter(round(expr("graft_jaro_winkler(na, nb)") * lit(1e6))
+      .filter(round(jaroWinkler(col("na"), col("nb")) * lit(1e6))
         .cast("long") >= minJwQ6)
     val nSample = samp.agg(count(lit(1)).as("n_sample"))
     val nTrue = sTrue.agg(count(lit(1)).as("n_true"))
@@ -416,7 +413,6 @@ object Entity {
                         name: String, loadedMap: DataFrame,
                         minJwQ6: Long = MinJwQ6,
                         maxBlock: Int = MaxBlock): DataFrame = {
-    graft.functions.VectorFunctions.register(standing.sparkSession)
     val deltaNames = delta.select(col(name).as("name")).distinct()
     val hits = deltaNames.join(broadcast(loadedMap), Seq("name"), "left")
     val misses = hits.filter(col("canon_name").isNull).select("name")
@@ -426,7 +422,7 @@ object Entity {
         .select(col("name").as("s_name"), col("blk")), Seq("blk"))
       .select(col("d_name"), col("s_name")).distinct()
       .withColumn("jw_q6",
-        round(expr("graft_jaro_winkler(d_name, s_name)") * lit(1e6))
+        round(jaroWinkler(col("d_name"), col("s_name")) * lit(1e6))
           .cast("long"))
       .filter(col("jw_q6") >= minJwQ6)
     val w = Window.partitionBy(col("d_name"))
@@ -464,10 +460,9 @@ object Entity {
     // quarter plus a novel quarter, so all three triage branches
     // exercise on real data) resolves against the LOADED copy only
     "er10_delta_canonicalize" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val part = Tables.part(s, d)
-      val standing = part.filter(expr("graft_polyhash(p_name) % 4") =!= 3)
-      val delta = part.filter(expr("graft_polyhash(p_name) % 4").isin(2, 3))
+      val standing = part.filter((polyHash(col("p_name")) % 4) =!= 3)
+      val delta = part.filter((polyHash(col("p_name")) % 4).isin(2, 3))
       val dir = IndexPaths.dir("er10_map", d)
       canonicalWriteMap(canonicalMapFromPairs(standing, "p_name",
         jaroWinklerPairsUnion(standing, "p_name")), dir)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -287,14 +288,13 @@ object Events {
     * `(n0, c0, cr0_q6, n1, c1, cr1_q6, lift_q6, z_q6)`. */
   def abTestReadout(events: DataFrame, userCol: String, typeCol: String,
                     convertIf: Column): DataFrame = {
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val perUser = events
       .withColumn("_cv", when(convertIf, lit(1L)).otherwise(lit(0L)))
       .select(col(userCol).as("user_id"), col("_cv"))
       .groupBy(col("user_id"))
       .agg(max(col("_cv")).as("conv"))
       .withColumn("variant",
-        expr("pmod(graft_polyhash(cast(user_id as string)), 2)"))
+        pmod(polyHash(col("user_id").cast("string")), lit(2)))
     // degenerate-experiment guards, mirrored in the oracle: an empty
     // variant nulls its rate (and everything downstream); an all-or-
     // nothing pooled rate nulls the z (its standard error is 0 — no
@@ -384,7 +384,6 @@ object Events {
       s"no Pocock boundary tabulated for looks=$looks " +
         s"(supported: ${PocockZq6.keys.toSeq.sorted.mkString(", ")})")
     val boundaryQ6 = PocockZq6(looks)
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val spark = events.sparkSession
     val ev = events.select(col(userCol).as("user_id"),
       unix_micros(col(ts)).as("us"),
@@ -394,7 +393,7 @@ object Events {
       .agg(min(col("us")).as("first_us"),
         min(when(col("cv") === 1L, col("us"))).as("conv_us"))
       .withColumn("variant",
-        expr("pmod(graft_polyhash(cast(user_id as string)), 2)"))
+        pmod(polyHash(col("user_id").cast("string")), lit(2)))
     val spine = spark.range(1L, looks + 1L).select(col("id").as("look"))
     val perLook = pu.crossJoin(broadcast(rng))
       .crossJoin(broadcast(spine))
@@ -454,7 +453,6 @@ object Events {
     * units). */
   def cupedReadout(events: DataFrame, userCol: String, tsCol: String,
                    metricIf: Column, valueCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val ev = events.select(col(userCol).as("user_id"),
         unix_micros(col(tsCol)).as("us"),
         when(metricIf, coalesce(col(valueCol), lit(0.0)))
@@ -470,7 +468,7 @@ object Events {
         sum(when(col("us") * 2 < col("mn") + col("mx"), lit(0L))
           .otherwise(col("q"))).as("y"))
       .withColumn("variant",
-        expr("pmod(graft_polyhash(cast(user_id as string)), 2)"))
+        pmod(polyHash(col("user_id").cast("string")), lit(2)))
     perUser.agg(
         count(lit(1)).as("n"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -552,7 +550,6 @@ object Events {
     * post0_q6, pre1_q6, post1_q6, did_q6, z_q6)`. */
   def didReadout(events: DataFrame, userCol: String, tsCol: String,
                  metricIf: Column, valueCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(events.sparkSession)
     val ev = events.select(col(userCol).as("user_id"),
         unix_micros(col(tsCol)).as("us"),
         when(metricIf, coalesce(col(valueCol), lit(0.0)))
@@ -569,7 +566,7 @@ object Events {
           .otherwise(col("q"))).as("y"))
       .withColumn("d", col("y") - col("x"))
       .withColumn("variant",
-        expr("pmod(graft_polyhash(cast(user_id as string)), 2)"))
+        pmod(polyHash(col("user_id").cast("string")), lit(2)))
     // the pooled Welch se² on the change scores, shared by the guard
     // and the z numerator (identical text in the oracle)
     val se2 = "((cast(n0 as double) * cast(sdd0 as double) - " +

@@ -1,8 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-
 /** Deterministic, engine-portable hashing used by the dedup / fingerprint
   * operators (SURVEY.md §7.5).
   *
@@ -35,15 +32,11 @@ object Hashing {
   val Bands = 4
   val RowsPerBand = 4
 
-  /** Spark column: polynomial rolling hash of a string column, via the
-    * native codegen'd [[graft.functions.PolyHash]] expression (callers
-    * must have run [[graft.functions.VectorFunctions.register]]; the
-    * equivalent-but-slower pure-builtin form is
+  /** DuckDB SQL fragment computing the same hash as
+    * [[graft.functions.GraftFunctions.polyHash]] of expression `e`; the
+    * equivalent pure-builtin Spark form is
     * `aggregate(transform(split(c, ''), ch -> ascii(ch)), 0L,
-    * (acc, x) -> (acc * 31 + x) % P)`). */
-  def polyHash(c: String): Column = expr(s"graft_polyhash($c)")
-
-  /** DuckDB SQL fragment computing the identical hash of expression `e`. */
+    * (acc, x) -> (acc * 31 + x) % P)`. */
   def polyHashSql(e: String): String =
     s"reduce(list_prepend(0::BIGINT, list_transform(string_split($e, ''), " +
     s"ch -> ascii(ch)::BIGINT)), (acc, x) -> (acc * 31 + x) % $P)"

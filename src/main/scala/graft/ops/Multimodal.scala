@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,11 +80,10 @@ object Multimodal {
     * batch and the union over batches equals the one-shot run
     * identically (pinned by MediaStreamSpec). */
   def framesOf(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     rawFramesOf(docs)
       .select(col("doc_id"), col("frame_idx"),
         length(col("frame")).cast("long").as("frame_bytes"),
-        expr("graft_polyhash(frame)").as("frame_hash"))
+        polyHash(col("frame")).as("frame_hash"))
   }
 
   /** The frame generator with the frame CONTENT still attached —
@@ -766,16 +766,14 @@ object Multimodal {
     // of a thumbnail/re-encode stage (input blob → smaller blob +
     // refreshed metadata), with the transform portable enough for the
     // oracle to replicate on the string form.
-    "m03_media_resize" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    "m03_media_resize" -> ((s, d) =>
       Tables.documents(s, d)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"),
           expr(s"concat_ws('', transform(sequence(0, (length(text) - 1) div $ResizeStep), " +
                s"i -> substring(text, i * $ResizeStep + 1, 1)))").as("small"))
         .select(col("doc_id"), length(col("small")).cast("long").as("n_bytes_small"),
-          expr("graft_polyhash(small)").as("small_hash"))
-    }),
+          polyHash(col("small")).as("small_hash"))),
 
     // Media-embedding → ANN composition: a deterministic stub
     // "embedding model" (8 affine-hash projections of the content hash
@@ -785,13 +783,12 @@ object Multimodal {
     // This is the multimodal→similarity loop a media pipeline runs:
     // decode → embed → index/search, all portable enough to oracle.
     "m04_media_knn" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val P = Hashing.P
       val dims = (0 until EmbedDims).map { j =>
         s"cast((h * ${Hashing.MinHashA(j)}L + ${Hashing.MinHashB(j)}L) % ${P}L as double) / $P.0D * 2.0D - 1.0D"
       }.mkString(", ")
       val emb = Tables.documents(s, d)
-        .select(col("doc_id"), expr("graft_polyhash(text)").as("h"))
+        .select(col("doc_id"), polyHash(col("text")).as("h"))
         .select(col("doc_id"), expr(s"array($dims)").as("e"))
       val probes = emb.filter(col("doc_id") < KnnProbes)
         .select(col("doc_id").as("probe_id"), col("e").as("pe"))
@@ -800,7 +797,7 @@ object Multimodal {
         .partitionBy(col("probe_id"))
         .orderBy(col("score").desc, col("doc_id"))
       corpus.crossJoin(broadcast(probes))
-        .withColumn("score", expr("graft_dot(e, pe)"))
+        .withColumn("score", dot(col("e"), col("pe")))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= KnnK)
         .select(col("probe_id"), col("doc_id"), col("rk"), col("score"))

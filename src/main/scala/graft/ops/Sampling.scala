@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -492,7 +493,7 @@ object Sampling {
     def bucketed(df: DataFrame) = df
       .select(col(id).as("_did"),
         explode(expr(s"filter(split($text, ' '), x -> x <> '')")).as("_tok"))
-      .withColumn("b", expr(s"graft_polyhash(_tok) % $buckets"))
+      .withColumn("b", polyHash(col("_tok")) % buckets)
     val all = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val tCnt = bucketed(target).groupBy(col("b")).agg(count(lit(1)).as("ct"))
@@ -653,11 +654,9 @@ object Sampling {
     // budget in. The tokens argument is a pluggable Column on every
     // budget/packing operator; this entry pins the subword path
     // end-to-end while s05 keeps the word-count baseline.
-    "s14_budget_subword" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    "s14_budget_subword" -> ((s, d) =>
       tokenBudget(Tables.documents(s, d), "doc_id", "lang",
-        TextOps.subwordTokens("text"), "n_chars", BudgetTokens)
-    }),
+        TextOps.subwordTokens("text"), "n_chars", BudgetTokens)),
     "s06_token_budget_2p" -> ((s, d) =>
       tokenBudgetTwoPass(Tables.documents(s, d), "doc_id", "lang",
         nTokens("text"), "n_chars", BudgetTokens)),
@@ -680,7 +679,6 @@ object Sampling {
     // DSIR: src0 stands in for the trusted target corpus (the d09/d17
     // convention), the other 19 sources are the raw web corpus
     "s11_dsir_select" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val docs = Tables.documents(s, d)
       dsirSelect(docs.filter(col("source") =!= "src0"),
         docs.filter(col("source") === "src0"), "doc_id", "text")

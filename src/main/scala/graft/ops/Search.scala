@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,7 +159,6 @@ object Search {
   def dirichletTopK(docs: DataFrame, id: String, text: String,
                     terms: Seq[String] = DefaultQuery, k: Int = 10): DataFrame = {
     require(terms.nonEmpty, "at least one query term")
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val termList = terms.map(t => s"'$t'").mkString(", ")
     val words = s"filter(split($text, ' '), x -> x <> '')"
     val spark = docs.sparkSession
@@ -172,8 +172,7 @@ object Search {
     // per-doc tfs — integer-exact, same value as counting occurrences
     val tf = docs.select(col(id).as("doc_id"),
         expr(s"size($words)").cast("long").as("dl"),
-        explode(expr(
-          s"graft_token_counts(filter($words, x -> x IN ($termList)))"))
+        explode(tokenCounts(expr(s"filter($words, x -> x IN ($termList))")))
           .as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
         col("tc.tf").as("tf"), col("dl"))
@@ -221,7 +220,6 @@ object Search {
                      terms: Seq[String] = DefaultQuery,
                      k: Int = 10): DataFrame = {
     require(terms.nonEmpty, "at least one query term")
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     // corpus scalars: one row, broadcast
     val stats = docs
       .select(size(col(tokens)).cast("long").as("dl"))
@@ -236,8 +234,7 @@ object Search {
       .mkString(", ")
     val tf = docs.select(col(id).as("doc_id"),
         size(col(tokens)).cast("long").as("dl"),
-        explode(expr(
-          s"graft_token_counts(filter($tokens, t -> t IN ($termList)))"))
+        explode(tokenCounts(expr(s"filter($tokens, t -> t IN ($termList))")))
           .as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
         col("tc.tf").as("tf"), col("dl"))
@@ -289,7 +286,6 @@ object Search {
     * scan; pass a checkpointed/persisted token column here). */
   def bm25BuildIndexTokens(docs: DataFrame, id: String,
                            tokens: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val stats = docs
       .select(size(col(tokens)).cast("long").as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
@@ -303,7 +299,7 @@ object Search {
     // per distinct token per doc.
     val postings = docs.select(col(id).as("doc_id"),
         size(col(tokens)).cast("long").as("dl"),
-        explode(expr(s"graft_token_counts($tokens)")).as("tc"))
+        explode(tokenCounts(col(tokens))).as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
         col("tc.tf").as("tf"), col("dl"))
     val lexicon = postings.groupBy(col("token")).agg(count(lit(1)).as("df"))
@@ -546,13 +542,12 @@ object Search {
                             terms: Seq[String] = DefaultQuery,
                             k: Int = 10): DataFrame = {
     require(terms.nonEmpty, "at least one query term")
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val termCols = terms.map(lit)
     // full-vocabulary per-doc tf in-array (the bm25BuildIndexTokens
     // move — cosine's norm needs every term, so this one deletes the
     // corpus-wide token exchange, not just the query-pruned one)
     val tf = docs.select(col(id).as("doc_id"),
-        explode(expr(s"graft_token_counts($tokens)")).as("tc"))
+        explode(tokenCounts(col(tokens))).as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
         col("tc.tf").as("tf"))
     val dfr = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -75,14 +76,13 @@ object Similarity {
     s"graft-ivf-1 $EncoderVersion dims=64 k=$KmeansK " +
       s"iters=$KmeansIters quant=$Quant"
 
-  private def cosExpr: String =
-    "graft_dot(a.v, b.v) / (a.nrm * b.nrm)"
+  private def cosCol: Column =
+    dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))
 
   /** Normalize caller columns to `(vec_id, v, nrm)`. */
   private def prep(vectors: DataFrame, id: String, vec: String): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     vectors.select(col(id).as("vec_id"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
   }
 
   private def topKPerProbe(scored: DataFrame, k: Int): DataFrame = {
@@ -104,7 +104,7 @@ object Similarity {
       v.as("b").join(broadcast(probes.as("a")),
           col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-          expr(cosExpr).as("cos")), k)
+          cosCol.as("cos")), k)
   }
 
   /** k-NN CLASSIFICATION (k13) — label held-out probe vectors by
@@ -125,10 +125,9 @@ object Similarity {
   def knnClassify(vectors: DataFrame, id: String, vec: String,
                   label: String, isProbe: Column => Column,
                   k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val v = vectors.select(col(id).as("vec_id"), col(vec).as("v"),
         col(label).as("lbl"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val probes = v.filter(isProbe(col("vec_id")))
     val corpus = v.filter(!isProbe(col("vec_id")))
     val wRank = Window.partitionBy(col("probe_id"))
@@ -136,7 +135,7 @@ object Similarity {
     corpus.as("b").crossJoin(broadcast(probes.as("a")))
       .select(col("a.vec_id").as("probe_id"), col("a.lbl").as("true_label"),
         col("b.vec_id").as("neighbor_id"), col("b.lbl").as("n_label"),
-        expr(cosExpr).as("cos"))
+        cosCol.as("cos"))
       .withColumn("rnk", row_number().over(wRank))
       .filter(col("rnk") <= k)
       .groupBy(col("probe_id"), col("true_label"), col("n_label"))
@@ -176,7 +175,7 @@ object Similarity {
       corpus.as("b").join(broadcast(probes.as("a")),
           col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-          expr(cosExpr).as("cos")), k)
+          cosCol.as("cos")), k)
   }
 
   /** MAXIMUM INNER-PRODUCT search (k16) — top-k by raw dot product,
@@ -209,7 +208,7 @@ object Similarity {
     v.as("b").join(broadcast(probes.as("a")),
         col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-        expr("graft_dot(a.v, b.v)").as("dot"))
+        dot(col("a.v"), col("b.v")).as("dot"))
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("dot"))
@@ -222,7 +221,7 @@ object Similarity {
              isProbe: Column => Column, k: Int, dims: Int = 64): DataFrame = {
     val bitCols = (0 until NumPlanes).map { i =>
       val w = (0 until dims).map(j => s"${weight(i, j, dims)}D").mkString(", ")
-      when(expr(s"graft_dot(v, array($w))") > 0d, 1 << i).otherwise(0)
+      when(dot(col("v"), expr(s"array($w)")) > 0d, 1 << i).otherwise(0)
     }
     val v = prep(vectors, id, vec).withColumn("bucket", bitCols.reduce(_ + _))
     val probes = v.filter(isProbe(col("vec_id")))
@@ -230,7 +229,7 @@ object Similarity {
       v.as("b").join(broadcast(probes.as("a")),
           col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
         .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-          expr(cosExpr).as("cos")), k)
+          cosCol.as("cos")), k)
   }
 
   /** Recall@k of an approximate neighbor list against the exact one
@@ -275,10 +274,9 @@ object Similarity {
     * `(probe_id, rnk, neighbor_id, cell, cos)`. */
   def ivfKnn(vectors: DataFrame, id: String, vec: String, cell: String,
              isProbe: Column => Column, k: Int, nprobe: Int = 1): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val v = vectors
       .select(col(id).as("vec_id"), col(vec).as("v"), col(cell).as("cell"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val cents = vectors
       .select(col(cell).as("cell"),
         posexplode(expr(
@@ -291,14 +289,14 @@ object Similarity {
         "transform(array_sort(collect_list(struct(pos, sq, n))), " +
         s"s -> (cast(s.sq as double) / cast(s.n as double)) / ${Quant}D)")
         .as("centroid"))
-      .withColumn("cnrm", expr("sqrt(graft_dot(centroid, centroid))"))
+      .withColumn("cnrm", sqrt(dot(col("centroid"), col("centroid"))))
     val probes = v.filter(isProbe(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))
     val wCell = Window.partitionBy(col("probe_id"))
       .orderBy(col("ccos").desc, col("cell"))
     val probeCell = probes.crossJoin(broadcast(cents))
       .withColumn("ccos",
-        expr("graft_dot(pv, centroid)") / (col("pnrm") * col("cnrm")))
+        dot(col("pv"), col("centroid")) / (col("pnrm") * col("cnrm")))
       .withColumn("crnk", row_number().over(wCell))
       .filter(col("crnk") <= nprobe)
       .select(col("probe_id"), col("pv"), col("pnrm"), col("cell"))
@@ -307,7 +305,7 @@ object Similarity {
     v.join(broadcast(probeCell), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cell"),
-        (expr("graft_dot(pv, v)") / (col("pnrm") * col("nrm"))).as("cos"))
+        (dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cos"))
       .withColumn("rnk", row_number().over(wK).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("cell"), col("cos"))
@@ -360,7 +358,6 @@ object Similarity {
                    k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, "k-means needs k >= 1 and iters >= 1")
     val spark = vectors.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val v = vectors.select(
         col(id).as("vec_id"),
@@ -384,7 +381,7 @@ object Similarity {
         val cdf = cents.toDF("cluster", "sq", "n")
           .withColumn("centroid", expr(
             s"transform(sq, s -> (cast(s as double) / cast(n as double)) / ${Quant}D)"))
-          .withColumn("cnrm", expr("sqrt(graft_dot(centroid, centroid))"))
+          .withColumn("cnrm", sqrt(dot(col("centroid"), col("centroid"))))
           .select(col("cluster"), col("centroid"), col("cnrm"))
         // argmax as an AGGREGATE, not a window: a per-vector row_number
         // would sort k candidate rows per vector; min over the
@@ -393,7 +390,7 @@ object Similarity {
         // unique, so later fields never decide) with map-side partials
         // and no sort at corpus scale.
         v.crossJoin(broadcast(cdf))
-          .withColumn("score", expr("graft_dot(v, centroid)") / col("cnrm"))
+          .withColumn("score", dot(col("v"), col("centroid")) / col("cnrm"))
           .groupBy(col("vec_id"))
           .agg(min(struct((-col("score")).as("ns"), col("cluster").as("cluster"),
             col("qv").as("qv"))).as("b"))
@@ -454,12 +451,11 @@ object Similarity {
   def ivfKnnTrainedSweep(vectors: DataFrame, id: String, vec: String,
                          assign: DataFrame, isProbe: Column => Column,
                          k: Int, nprobes: Seq[Int]): Seq[(Int, DataFrame)] = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val cells = assign.select(col("vec_id").as(id), col("cluster").as("ivf_cell"))
     val joined = vectors.join(cells, id)
     val v = joined
       .select(col(id).as("vec_id"), col(vec).as("v"), col("ivf_cell").as("cell"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       .localCheckpoint(false)
     val cents = joined
       .select(col("ivf_cell").as("cell"),
@@ -473,14 +469,14 @@ object Similarity {
         "transform(array_sort(collect_list(struct(pos, sq, n))), " +
         s"s -> (cast(s.sq as double) / cast(s.n as double)) / ${Quant}D)")
         .as("centroid"))
-      .withColumn("cnrm", expr("sqrt(graft_dot(centroid, centroid))"))
+      .withColumn("cnrm", sqrt(dot(col("centroid"), col("centroid"))))
     val wCell = Window.partitionBy(col("probe_id"))
       .orderBy(col("ccos").desc, col("cell"))
     val probeCellRanked = v.filter(isProbe(col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("v").as("pv"), col("nrm").as("pnrm"))
       .crossJoin(broadcast(cents))
       .withColumn("ccos",
-        expr("graft_dot(pv, centroid)") / (col("pnrm") * col("cnrm")))
+        dot(col("pv"), col("centroid")) / (col("pnrm") * col("cnrm")))
       .withColumn("crnk", row_number().over(wCell))
       .select(col("probe_id"), col("pv"), col("pnrm"), col("cell"), col("crnk"))
       .localCheckpoint()
@@ -492,7 +488,7 @@ object Similarity {
       np -> v.join(broadcast(probeCell), Seq("cell"))
         .filter(col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"), col("cell"),
-          (expr("graft_dot(pv, v)") / (col("pnrm") * col("nrm"))).as("cos"))
+          (dot(col("pv"), col("v")) / (col("pnrm") * col("nrm"))).as("cos"))
         .withColumn("rnk", row_number().over(wK).cast("long"))
         .filter(col("rnk") <= k)
         .select(col("probe_id"), col("rnk"), col("neighbor_id"), col("cell"),
@@ -553,10 +549,9 @@ object Similarity {
     * and the materialization matter). */
   private def pqNormalized(vectors: DataFrame, id: String,
                            vec: String): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     vectors.select(col(id).as("vec_id"),
         expr(s"transform($vec, x -> cast(x as double))").as("dv"))
-      .withColumn("nrm", expr("sqrt(graft_dot(dv, dv))"))
+      .withColumn("nrm", sqrt(dot(col("dv"), col("dv"))))
       .select(col("vec_id"), expr("transform(dv, x -> x / nrm)").as("nv"))
       .localCheckpoint()
   }
@@ -675,10 +670,10 @@ object Similarity {
     // same divide). One exchange total; output bit-identical.
     val cb = broadcast(codebooks
       .select(col("sub"), col("cluster"), col("centroid"),
-        expr("sqrt(graft_dot(centroid, centroid))").as("cnrm")))
+        sqrt(dot(col("centroid"), col("centroid"))).as("cnrm")))
     val scored = vn.crossJoin(cb)
       .withColumn("score",
-        expr(s"graft_dot(slice(nv, cast(sub * $sub + 1 as int), $sub), centroid)")
+        dot(expr(s"slice(nv, cast(sub * $sub + 1 as int), $sub)"), col("centroid"))
           / col("cnrm"))
     val aggs = (0 until m).map { i =>
       min(when(col("sub") === i,
@@ -755,7 +750,7 @@ object Similarity {
         .crossJoin(broadcast(codebooks.filter(col("sub") === i)
           .select(col("cluster"), col("centroid"))))
         .select(col("probe_id"), col("cluster").as(s"c$i"),
-          expr("graft_dot(pv, centroid)").as(s"dt$i"))
+          dot(col("pv"), col("centroid")).as(s"dt$i"))
     }
 
   /** The ADC lookup-sum over a candidate code frame: join the
@@ -804,7 +799,7 @@ object Similarity {
       .join(vn.select(col("vec_id").as("probe_id"), col("nv").as("pnv")), "probe_id")
       .join(vn.select(col("vec_id").as("neighbor_id"), col("nv").as("nnv")), "neighbor_id")
       .select(col("probe_id"), col("neighbor_id"),
-        expr("graft_dot(pnv, nnv)").as("cos"))
+        dot(col("pnv"), col("nnv")).as("cos"))
     topKPerProbe(exact, k).withColumnRenamed("cos", "score")
   }
 
@@ -860,17 +855,16 @@ object Similarity {
             isProbe: Column => Column, k: Int,
             pdims: Int = RpDims, dims: Int = 64,
             refine: Int = RpRefine): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val vn = vectors.select(col(id).as("vec_id"),
         expr(s"transform($vec, x -> cast(x as double))").as("dv"))
-      .withColumn("nrm", expr("sqrt(graft_dot(dv, dv))"))
+      .withColumn("nrm", sqrt(dot(col("dv"), col("dv"))))
       .select(col("vec_id"), expr("transform(dv, x -> x / nrm)").as("nv"))
     val projCols = (0 until pdims).map { i =>
       val s = (0 until dims).map(j => s"${rpSign(i, j, dims)}D").mkString(", ")
-      expr(s"graft_dot(nv, array($s))")
+      dot(col("nv"), expr(s"array($s)"))
     }
     val vp = vn.withColumn("pv", array(projCols: _*))
-      .withColumn("pnrm", expr("sqrt(graft_dot(pv, pv))"))
+      .withColumn("pnrm", sqrt(dot(col("pv"), col("pv"))))
       .select("vec_id", "pv", "pnrm")
     sketchShortlistRefine(vn, vp, isProbe, k, refine)
   }
@@ -895,8 +889,9 @@ object Similarity {
     val scored = vp.as("b").join(broadcast(probes.as("a")),
         col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("probe_id"), col("b.vec_id").as("neighbor_id"),
-        expr("CASE WHEN a.pnrm * b.pnrm = 0.0D THEN -2.0D " +
-          "ELSE graft_dot(a.pv, b.pv) / (a.pnrm * b.pnrm) END").as("pcos"))
+        when(col("a.pnrm") * col("b.pnrm") === 0.0d, -2.0d)
+          .otherwise(dot(col("a.pv"), col("b.pv")) / (col("a.pnrm") * col("b.pnrm")))
+          .as("pcos"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("pcos").desc, col("neighbor_id"))
     val shortlist = scored.withColumn("arnk", row_number().over(w))
@@ -906,7 +901,7 @@ object Similarity {
       .join(vn.select(col("vec_id").as("probe_id"), col("nv").as("pnv")), "probe_id")
       .join(vn.select(col("vec_id").as("neighbor_id"), col("nv").as("nnv")), "neighbor_id")
       .select(col("probe_id"), col("neighbor_id"),
-        expr("graft_dot(pnv, nnv)").as("cos"))
+        dot(col("pnv"), col("nnv")).as("cos"))
     topKPerProbe(exact, k).withColumnRenamed("cos", "score")
   }
 
@@ -935,13 +930,12 @@ object Similarity {
   def mrlKnn(vectors: DataFrame, id: String, vec: String,
              isProbe: Column => Column, k: Int,
              mdims: Int = MrlDims, refine: Int = RpRefine): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val vn = vectors.select(col(id).as("vec_id"),
         expr(s"transform($vec, x -> cast(x as double))").as("dv"))
-      .withColumn("nrm", expr("sqrt(graft_dot(dv, dv))"))
+      .withColumn("nrm", sqrt(dot(col("dv"), col("dv"))))
       .select(col("vec_id"), expr("transform(dv, x -> x / nrm)").as("nv"))
     val vp = vn.select(col("vec_id"), expr(s"slice(nv, 1, $mdims)").as("pv"))
-      .withColumn("pnrm", expr("sqrt(graft_dot(pv, pv))"))
+      .withColumn("pnrm", sqrt(dot(col("pv"), col("pv"))))
     sketchShortlistRefine(vn, vp, isProbe, k, refine)
   }
 
@@ -1072,16 +1066,15 @@ object Similarity {
   def hardNegatives(vectors: DataFrame, id: String, vec: String,
                     label: String, isProbe: Column => Column,
                     k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(vectors.sparkSession)
     val v = vectors
       .select(col(id).as("vec_id"), col(label).as("lbl"), col(vec).as("v"))
-      .withColumn("nrm", expr("sqrt(graft_dot(v, v))"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val probes = v.filter(isProbe(col("vec_id")))
     topKPerProbe(
       v.as("b").join(broadcast(probes.as("a")),
           col("a.lbl") =!= col("b.lbl"))
         .select(col("a.vec_id").as("probe_id"),
-          col("b.vec_id").as("neighbor_id"), expr(cosExpr).as("cos")), k)
+          col("b.vec_id").as("neighbor_id"), cosCol.as("cos")), k)
   }
 
   // ───── Shared training memo (the Clusters.memo pattern) ─────
@@ -1229,7 +1222,7 @@ object Similarity {
       .select(col("cluster"),
         expr(s"transform(sq, s -> (cast(s as double) / cast(n as double)) / ${Quant}D)")
           .as("centroid"))
-      .withColumn("cnrm", expr("sqrt(graft_dot(centroid, centroid))"))
+      .withColumn("cnrm", sqrt(dot(col("centroid"), col("centroid"))))
 
   /** The IVFPQ coarse-gate centroids over the harness corpus —
     * normalized members' exact quantized means per trained cell —
@@ -1293,7 +1286,7 @@ object Similarity {
                           cellCentroids: DataFrame): DataFrame = {
     val vn = pqNormalized(vectors, id, vec)
     vn.crossJoin(broadcast(cellCentroids))
-      .withColumn("score", expr("graft_dot(nv, centroid)") / col("cnrm"))
+      .withColumn("score", dot(col("nv"), col("centroid")) / col("cnrm"))
       .groupBy(col("vec_id"))
       .agg(min(struct((-col("score")).as("ns"),
         col("cluster").as("cluster"))).as("b"))
@@ -1415,7 +1408,7 @@ object Similarity {
       .orderBy(col("ccos").desc, col("cluster"))
     val probeCells = probes.select(col("vec_id").as("probe_id"), col("nv"))
       .crossJoin(broadcast(cellCentroids))
-      .withColumn("ccos", expr("graft_dot(nv, centroid)") / col("cnrm"))
+      .withColumn("ccos", dot(col("nv"), col("centroid")) / col("cnrm"))
       .withColumn("crnk", row_number().over(wCell))
       .filter(col("crnk") <= nprobe)
       .select(col("probe_id"), col("cluster").as("cell"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   * Why not `approx_count_distinct`: Spark's HLL++ hashes with xxhash64
   * and applies engine-private bias corrections — no other engine
   * reproduces its output, so it can only ever get a rows-only check.
-  * This sketch derives every register from [[Hashing.polyHash]] and
-  * uses only integer arithmetic plus EXACT double operations (powers of
-  * two, addition, one division), so the estimate is a deterministic
+  * This sketch derives every register from
+  * [[graft.functions.GraftFunctions.polyHash]] and uses only integer
+  * arithmetic plus EXACT double operations (powers of two, addition,
+  * one division), so the estimate is a deterministic
   * function of the input SET in any engine.
   *
   * Construction (classic Flajolet HLL, m = 2^p registers):
@@ -86,6 +88,10 @@ object Sketches {
   val ScatterA: Long = Hashing.MinHashA(1)
   val ScatterB: Long = Hashing.MinHashB(1)
 
+  /** The scattered hash `h` of column `valueCol`, cast to string. */
+  private def scatteredHash(valueCol: String): Column =
+    (polyHash(col(valueCol).cast("string")) * ScatterA + ScatterB) % Hashing.P
+
   /** The HLL REGISTER TABLE of a string column: `(bucket, r)`, at most
     * 2^p rows. This is the mergeable artifact — persist one per
     * shard/day/source and [[hllMerge]] them later; max-per-bucket makes
@@ -94,11 +100,8 @@ object Sketches {
     * register tables built with the SAME p. */
   def hllRegisters(df: DataFrame, valueCol: String, p: Int = P2): DataFrame = {
     val m = 1 << p
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df
-      .select(expr(
-        s"(graft_polyhash(cast($valueCol as string)) * ${ScatterA}L + ${ScatterB}L) % ${Hashing.P}L")
-        .as("h"))
+      .select(scatteredHash(valueCol).as("h"))
       .filter(col("h").isNotNull)
       .select((col("h") % m).as("bucket"), expr(s"h div $m").as("w"))
       .select(col("bucket"), (lit(wBits(p)) - bitLenCase("w", wBits(p)) + 1).as("rho"))
@@ -158,11 +161,8 @@ object Sketches {
   def hllDistinctBy(df: DataFrame, groupCol: String, valueCol: String,
                     p: Int = P2): DataFrame = {
     val m = 1 << p
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df
-      .select(col(groupCol).as("grp"), expr(
-        s"(graft_polyhash(cast($valueCol as string)) * ${ScatterA}L + ${ScatterB}L) % ${Hashing.P}L")
-        .as("h"))
+      .select(col(groupCol).as("grp"), scatteredHash(valueCol).as("h"))
       .filter(col("h").isNotNull)
       .select(col("grp"), (col("h") % m).as("bucket"), expr(s"h div $m").as("w"))
       .select(col("grp"), col("bucket"),
@@ -363,11 +363,8 @@ object Sketches {
     * count, not the row count — when even that is too hot, sketch
     * per shard (one pass each, k rows out) and [[bottomKMerge]]. */
   def bottomKSketch(df: DataFrame, valueCol: String, k: Int = BottomK): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df
-      .select(expr(
-        s"(graft_polyhash(cast($valueCol as string)) * ${ScatterA}L + ${ScatterB}L) % ${Hashing.P}L")
-        .as("h"), col(valueCol).cast("string").as("v"))
+      .select(scatteredHash(valueCol).as("h"), col(valueCol).cast("string").as("v"))
       .filter(col("h").isNotNull)
       // min(v) per hash: deterministic representative (collisions are
       // ~n²/2P rare but must not make the artifact run-dependent)
@@ -533,10 +530,9 @@ object Sketches {
     * [[graft.streaming.SketchStream.cmsCellsStream]] is this method on
     * a `readStream` frame. */
   def cmsCells(docs: DataFrame, textCol: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs
       .select(explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("token"))
-      .select(expr("graft_polyhash(token)").as("h"))
+      .select(polyHash(col("token")).as("h"))
       .select(explode(expr(s"array($cmsCellStructs)")).as("c"))
       .groupBy(col("c.row").as("row"), col("c.col").as("col"))
       .agg(count(lit(1)).as("cnt"))
@@ -565,12 +561,11 @@ object Sketches {
     * candidates with `est ≥ minCount`. */
   def cmsHeavyHitters(docs: DataFrame, textCol: String,
                       minCount: Long = HeavyMin): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val toks = docs.select(
       explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("token"))
     val cells = cmsCells(docs, textCol)
     val vocabCells = toks.distinct()
-      .select(col("token"), expr("graft_polyhash(token)").as("h"))
+      .select(col("token"), polyHash(col("token")).as("h"))
       .select(col("token"), explode(expr(s"array($cmsCellStructs)")).as("c"))
       .select(col("token"), col("c.row").as("row"), col("c.col").as("col"))
     val est = vocabCells
@@ -588,10 +583,9 @@ object Sketches {
     * zero for never-seen cells. */
   def cmsProbe(cells: DataFrame, probes: Seq[String]): DataFrame = {
     val spark = cells.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val probeCells = probes.toDF("token")
-      .select(col("token"), expr("graft_polyhash(token)").as("h"))
+      .select(col("token"), polyHash(col("token")).as("h"))
       .select(col("token"), explode(expr(s"array($cmsCellStructs)")).as("c"))
       .select(col("token"), col("c.row").as("row"), col("c.col").as("col"))
     probeCells
@@ -611,19 +605,18 @@ object Sketches {
   def cmsFrequenciesBy(docs: DataFrame, group: String, textCol: String,
                        probes: Seq[String]): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val cellStructs = cmsCellStructs
     val cells = docs
       .select(col(group).as("grp"),
         explode(expr(s"filter(split($textCol, ' '), x -> x <> '')")).as("token"))
-      .select(col("grp"), expr("graft_polyhash(token)").as("h"))
+      .select(col("grp"), polyHash(col("token")).as("h"))
       .select(col("grp"), explode(expr(s"array($cellStructs)")).as("c"))
       .groupBy(col("grp"), col("c.row").as("row"), col("c.col").as("col"))
       .agg(count(lit(1)).as("cnt"))
     val probeCells = docs.select(col(group).as("grp")).distinct()
       .crossJoin(probes.toDF("token"))
-      .select(col("grp"), col("token"), expr("graft_polyhash(token)").as("h"))
+      .select(col("grp"), col("token"), polyHash(col("token")).as("h"))
       .select(col("grp"), col("token"),
         explode(expr(s"array($cellStructs)")).as("c"))
       .select(col("grp"), col("token"),
@@ -696,7 +689,6 @@ object Sketches {
   def hourlyHllRegisters(events: DataFrame, ts: String, valueCol: String,
                          p: Int = P2): DataFrame = {
     val m = 1 << p
-    graft.functions.VectorFunctions.register(events.sparkSession)
     events
       // FLOOR-consistent hour bucketing: Spark's `div` truncates toward
       // zero while the DuckDB oracle's `//` floors, so for pre-1970
@@ -706,8 +698,7 @@ object Sketches {
       // sign-safety recipe as q46/c17's magnitude division.
       .select(expr(s"((unix_micros($ts) - pmod(unix_micros($ts), 3600000000L)) div 3600000000L) * 3600L")
           .as("hour_epoch"),
-        expr(s"(graft_polyhash(cast($valueCol as string)) * ${ScatterA}L + ${ScatterB}L) % ${Hashing.P}L")
-          .as("h"))
+        scatteredHash(valueCol).as("h"))
       .filter(col("h").isNotNull)
       .select(col("hour_epoch"), (col("h") % m).as("bucket"),
         expr(s"h div $m").as("w"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -375,10 +376,9 @@ object TextOps {
           * 1000).cast("long"))
 
   /** Order-sensitive whole-document rolling-hash fingerprint (the
-    * portable [[Hashing.polyHash]]). Appends `fp`. */
+    * portable [[graft.functions.GraftFunctions.polyHash]]). Appends `fp`. */
   def withFingerprint(df: DataFrame, text: String): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
-    df.withColumn("fp", expr(s"graft_polyhash($text)"))
+    df.withColumn("fp", polyHash(col(text)))
   }
 
   /** Stopword-hit language-ID heuristic. Appends `guessed_lang,
@@ -556,10 +556,8 @@ object TextOps {
     * zero-exchange generate and pay only their df exchange (window or
     * re-agg+join). Row set identical to the groupBy form. */
   private def docLocalTf(docs: DataFrame, id: String, text: String): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs.select(col(id).as("doc_id"),
-        explode(expr(
-          s"graft_token_counts(filter(split($text, ' '), x -> x <> ''))"))
+        explode(tokenCounts(expr(s"filter(split($text, ' '), x -> x <> '')")))
           .as("tc"))
       .select(col("doc_id"), col("tc.token").as("token"),
         col("tc.tf").as("tf"))
@@ -946,12 +944,11 @@ object TextOps {
     * bit-identical, no quantization needed before the final q6
     * readout. Output: `(id, n_features, score_q6, keep)`. */
   def hashedClassifier(df: DataFrame, id: String, text: String): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val P = Hashing.P
     df
       .select(col(id), expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= 1)
-      .select(col(id), expr("graft_shingle_hashes(tk, 1, 1)").as("hs"))
+      .select(col(id), shingleHashes(col("tk"), 1).as("hs"))
       .select(col(id),
         size(col("hs")).cast("long").as("n_features"),
         expr(s"""aggregate(hs, cast(0.0 as double), (acc, k) ->
@@ -985,13 +982,12 @@ object TextOps {
     * n_unique, novelty_q6)`. */
   def shingleNovelty(docs: DataFrame, id: String, text: String,
                      n: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val sh = docs
       .select(col(id).as("doc_id"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
       .select(col("doc_id"),
-        explode(expr(s"graft_shingle_hashes(tk, $n, 1)")).as("sk"))
+        explode(shingleHashes(col("tk"), n)).as("sk"))
     sh
       .withColumn("df", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("sk"))))
@@ -1018,13 +1014,12 @@ object TextOps {
     * coverage_q6)`. */
   def refCoverage(docs: DataFrame, id: String, text: String,
                   isRef: Column, n: Int = 3): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     val sh = docs
       .select(col(id).as("doc_id"), isRef.as("is_ref"),
         expr(s"filter(split($text, ' '), x -> x <> '')").as("tk"))
       .filter(size(col("tk")) >= n)
       .select(col("doc_id"), col("is_ref"),
-        explode(expr(s"graft_shingle_hashes(tk, $n, 1)")).as("sk"))
+        explode(shingleHashes(col("tk"), n)).as("sk"))
     val ref = sh.filter(col("is_ref")).select(col("sk")).distinct()
       .withColumn("hit", lit(1L))
     sh.filter(!col("is_ref"))
@@ -1352,11 +1347,9 @@ object TextOps {
     "t23_bpe_encode" -> ((s, d) =>
       bpeEncodeCounts(Tables.documents(s, d), "doc_id", "text",
         sharedBpeMerges(s, d))),
-    "t18_subword_tokens" -> ((s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    "t18_subword_tokens" -> ((s, d) =>
       Tables.documents(s, d).select(col("doc_id"),
-        subwordTokens("text").as("n_subword_tokens"))
-    }),
+        subwordTokens("text").as("n_subword_tokens"))),
     "t17_ref_coverage" -> ((s, d) =>
       refCoverage(Tables.documents(s, d), "doc_id", "text",
         col("source") === "src0")),

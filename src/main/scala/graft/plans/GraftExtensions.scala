@@ -52,47 +52,36 @@ object RewriteHofDotProduct extends Rule[LogicalPlan] {
 }
 
 /** Extension installer: `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (set by Verify/Bench/tests) registers the graft native functions and
-  * the HOF-rewrite rule on every session built from that config — the
-  * library's official integration point, with
-  * [[graft.functions.VectorFunctions.register]] kept as the runtime
-  * fallback for externally-built sessions. */
+  * (set by [[graft.Conf.configure]] and the test session) registers the
+  * graft native functions and the HOF-rewrite rule on every session
+  * built from that config. [[GraftExtensions.functions]] is the only
+  * name → expression map; code reaches the functions through the typed
+  * constructors in [[graft.functions.GraftFunctions]], SQL strings by
+  * name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      (exprs: Seq[Expression]) => PolyHash(exprs.head)))
-    def lit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (exprs: Seq[Expression]) =>
-        ShingleHashes(exprs.head, lit(exprs(1)), lit(exprs(2)) != 0)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head, lit(exprs(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (exprs: Seq[Expression]) => SimHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "graft_jaro_winkler"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_inter_count"),
-      new ExpressionInfo(classOf[SortedInterCount].getName, "graft_inter_count"),
-      (exprs: Seq[Expression]) => SortedInterCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_token_counts"),
-      new ExpressionInfo(classOf[TokenCounts].getName, "graft_token_counts"),
-      (exprs: Seq[Expression]) => TokenCounts(exprs.head)))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((
+        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => RewriteHofDotProduct)
   }
+}
+
+object GraftExtensions {
+  // the token-window hash family takes its small-int parameters as
+  // foldable literals, resolved at analysis into case-class params
+  private def lit(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+
+  /** (SQL name, expression class, builder) for each native function. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("graft_polyhash", classOf[PolyHash], e => PolyHash(e(0))),
+    ("graft_shingle_hashes", classOf[ShingleHashes],
+      e => ShingleHashes(e(0), lit(e(1)), lit(e(2)) != 0)),
+    ("graft_minhash", classOf[MinHashSig], e => MinHashSig(e(0), lit(e(1)))),
+    ("graft_simhash", classOf[SimHash], e => SimHash(e(0))),
+    ("graft_jaro_winkler", classOf[JaroWinkler], e => JaroWinkler(e(0), e(1))),
+    ("graft_inter_count", classOf[SortedInterCount], e => SortedInterCount(e(0), e(1))),
+    ("graft_token_counts", classOf[TokenCounts], e => TokenCounts(e(0))))
 }

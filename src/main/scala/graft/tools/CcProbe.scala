@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.functions.GraftFunctions._
 import org.apache.spark.sql.functions._
 
 /** Throwaway probe for the r19 optimization round: how many
@@ -66,12 +67,11 @@ object CcProbe {
         f"${(System.nanoTime() - t1) / 1e9}%.2f s  [library CC]")
     }
     val part = graft.ops.Tables.part(spark, d)
-    graft.functions.VectorFunctions.register(spark)
     val jwPairs = graft.ops.Entity
       .jaroWinklerPairsUnion(part, "p_name").localCheckpoint()
     probe("er08 jw-union name pairs")(
-      jwPairs.withColumn("ha", expr("graft_polyhash(name_a)"))
-        .withColumn("hb", expr("graft_polyhash(name_b)")),
+      jwPairs.withColumn("ha", polyHash(col("name_a")))
+        .withColumn("hb", polyHash(col("name_b"))),
       "ha", "hb")
     val docs = graft.ops.Tables.documents(spark, d)
     probe("d02 word jaccard pairs")(

@@ -49,7 +49,6 @@ object ProbeHplsh {
 
       // Set-0 bucket-occupancy profile at the scaled plane count: the
       // skew the cap exists to backstop, measured rather than assumed.
-      graft.functions.VectorFunctions.register(spark)
       val occ = Dedup
         .multiProbeBuckets(vecs, "vec_id", "embedding", "vec_id",
           planes, sets = 1, dims = 64)

@@ -41,7 +41,6 @@ object VecProbe {
     // bucket-census pass (untimed): per set, how many buckets exist,
     // how many exceed the cap, and how many rows live inside those —
     // the rows the cap excludes from pair expansion
-    graft.functions.VectorFunctions.register(spark)
     val bk = graft.ops.Dedup.multiProbeBuckets(
       vecs, "vec_id", "embedding", "vec_id", planes, sets, 64)
       .localCheckpoint()

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.etl.TestSpark
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("graft_dot equals the zip_with/aggregate fold, bit for bit") {
-    VectorFunctions.register(spark)
     val e = graft.ops.Tables.embeddings(spark, sf)
       .select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"),
@@ -25,7 +24,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_dot handles mixed float/double inputs") {
-    VectorFunctions.register(spark)
     val e = graft.ops.Tables.embeddings(spark, sf).limit(10)
       .select(col("embedding"),
         expr("transform(embedding, x -> cast(x as double))").as("vd"))
@@ -41,7 +39,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
     // optimizer rule, so it can't serve as the reference here):
     // zip_with pads the shorter array with null and a null product
     // poisons the aggregate fold → any mismatch or null element is NULL
-    VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(
       (Seq[Option[Double]](Some(1), Some(2)), Seq[Option[Double]](Some(3), Some(4))),
@@ -58,7 +55,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_polyhash equals the split/ascii/aggregate fold") {
-    VectorFunctions.register(spark)
     val d = graft.ops.Tables.documents(spark, sf)
     val both = d.select(
       expr("graft_polyhash(text)").as("fast"),
@@ -68,7 +64,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_polyhash is null-safe and empty-safe") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(Some("abc"), Some(""), None).toDF("s")
       .select(expr("graft_polyhash(s)").as("h")).collect()
@@ -83,6 +78,42 @@ class NativeFunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     val out = Seq("xy").toDF("s").selectExpr("graft_polyhash(s)").collect()
     assert(out.head.getLong(0) == ('x' * 31 + 'y') % 1000000007L)
+    // every registered name resolves to its expression class, and each
+    // typed constructor analyzes to the same expression as its SQL form
+    import GraftFunctions._
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0), Seq("a", "b", "a", "b"),
+        "martha", "marhta", Seq(1L, 2L, 5L), Seq(2L, 5L, 7L)))
+      .toDF("va", "vb", "tk", "sa", "sb", "ha", "hb")
+    val cases: Seq[(String, Column)] = Seq(
+      "graft_dot(va, vb)" -> dot(col("va"), col("vb")),
+      "graft_polyhash(sa)" -> polyHash(col("sa")),
+      "graft_shingle_hashes(tk, 2, 1)" -> shingleHashes(col("tk"), 2),
+      "graft_shingle_hashes(tk, 2, 0)" -> shingleHashes(col("tk"), 2, combined = false),
+      "graft_minhash(tk, 2)" -> minHash(col("tk"), 2),
+      "graft_simhash(tk)" -> simHash(col("tk")),
+      "graft_jaro_winkler(sa, sb)" -> jaroWinkler(col("sa"), col("sb")),
+      "graft_inter_count(ha, hb)" -> interCount(col("ha"), col("hb")),
+      "graft_token_counts(tk)" -> tokenCounts(col("tk")))
+    val registry = graft.plans.GraftExtensions.functions
+      .map { case (name, cls, _) => name -> cls }.toMap
+    assert(cases.map(_._1.takeWhile(_ != '(')).toSet == registry.keySet)
+    def analyzed(c: Column) = {
+      val q = df.select(c.as("r"))
+      val e = q.queryExecution.analyzed match {
+        case Project(Seq(a: Alias), _) => a.child
+        case p => fail(s"unexpected plan:\n$p")
+      }
+      (e, q.collect().toSeq)
+    }
+    cases.foreach { case (sql, typed) =>
+      val (viaSql, sqlRows) = analyzed(expr(sql))
+      val (viaTyped, typedRows) = analyzed(typed)
+      assert(viaSql.getClass == registry(sql.takeWhile(_ != '(')), sql)
+      assert(viaTyped == viaSql, sql)
+      assert(typedRows == sqlRows, sql)
+    }
   }
 
   /** The HOF/string reference forms the token-window expressions must
@@ -95,7 +126,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
     df.select(expr(s"filter(split($col0, ' '), x -> x <> '')").as("tk"))
 
   test("graft_shingle_hashes(combined) equals hashing the shingle strings") {
-    VectorFunctions.register(spark)
     val d = tokens(graft.ops.Tables.documents(spark, sf), "text")
       .filter(size(col("tk")) >= 3)
     val both = d.select(
@@ -106,7 +136,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_shingle_hashes(forward) and graft_minhash match the string path") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     // adversarial tokens: unicode (code-point hashing), repeated shingles
     // (distinctness), single-window and window-count edges
@@ -131,7 +160,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_jaro_winkler pins the textbook values (incl. boost threshold + empties)") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     // q6 values cross-checked against DuckDB's jaro_winkler_similarity
     val cases = Seq(
@@ -158,7 +186,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_simhash equals the relational count/bit-explode form") {
-    VectorFunctions.register(spark)
     val d = graft.ops.Tables.documents(spark, "/root/testdata/sf0.01")
     val fast = graft.ops.Dedup.simhash(d, "doc_id", "text")
     val ref = d
@@ -180,7 +207,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
     // punctuation, 1-char tokens) across n = 2..4 — the native
     // Rabin-Karp composition must match hashing the built shingle
     // strings exactly, every time
-    VectorFunctions.register(spark)
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
     val token = Gen.oneOf(
@@ -206,7 +232,6 @@ class NativeFunctionsSpec extends AnyFunSuite {
   }
 
   test("token-window expressions handle empty and too-short inputs") {
-    VectorFunctions.register(spark)
     import spark.implicits._
     val rows = Seq(Seq[String](), Seq("a"), Seq("a", "b")).toDF("tk")
       .select(

@@ -1306,7 +1306,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("t18 subword counts dominate word counts and grow with word length") {
-    graft.functions.VectorFunctions.register(spark)
     val joined = TextOps.queries("t18_subword_tokens")(spark, sf)
       .join(TextOps.withTokenCounts(Tables.documents(spark, sf), "text")
         .select("doc_id", "n_ws_tokens"), "doc_id")
@@ -1588,11 +1587,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("m01 media metadata checksum equals the portable text hash") {
-    graft.functions.VectorFunctions.register(spark)
     val meta = Multimodal.queries("m01_media_meta")(spark, sf)
     val joined = Tables.documents(spark, sf)
       .select(org.apache.spark.sql.functions.col("doc_id"),
-        Hashing.polyHash("text").as("fp"))
+        graft.functions.GraftFunctions.polyHash(col("text")).as("fp"))
       .join(meta, "doc_id")
     assert(joined.filter(col("fp") =!= col("checksum")).count() == 0)
   }
@@ -2342,7 +2340,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("d16 line dedup keeps exactly one copy of every distinct segment") {
-    graft.functions.VectorFunctions.register(spark)
     val out = Dedup.lineDedup(Tables.documents(spark, sf), "doc_id", "text")
       .collect().map(r => (r.getLong(0),
         (r.getLong(1), r.getLong(2), r.getString(3)))).toMap
@@ -2365,7 +2362,6 @@ class OpsSpec extends AnyFunSuite {
 
   test("d16 drops a repeated line from every doc but the first") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val boiler = "b1 b2 b3 b4 b5 b6 b7 b8" // exactly one 8-word segment
     val docs = Seq(
       (1L, s"$boiler u1 u2 u3 u4 u5 u6 u7 u8"),
@@ -2416,7 +2412,6 @@ class OpsSpec extends AnyFunSuite {
 
   test("s11 DSIR scores equal a from-scratch recomputation and rank target-like docs first") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val P = Hashing.P
     val B = 8
     def ph(tok: String): Long =

@@ -69,7 +69,6 @@ class RoundNineOpsSpec extends AnyFunSuite {
       row.getLong(4))
     // independent recompute of the experiment counts
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
-    graft.functions.VectorFunctions.register(spark)
     val pu = ev.groupBy(col("user_id"))
       .agg(max(when(col("event_type") === "purchase" &&
         col("value") >= Events.ConvertValue, 1L).otherwise(0L)).as("conv"))

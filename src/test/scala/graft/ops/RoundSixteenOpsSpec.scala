@@ -242,7 +242,6 @@ class RoundSixteenOpsSpec extends AnyFunSuite {
 
   test("graft_inter_count ≡ size(array_intersect) on every real " +
     "shingle-array pair, plus the empty/disjoint/identical edges") {
-    graft.functions.VectorFunctions.register(spark)
     // every cross pair of real sorted-distinct shingle arrays from the
     // fixture corpus — the exact input class the verify paths feed it
     val hs = Dedup.shingleHashArrays(

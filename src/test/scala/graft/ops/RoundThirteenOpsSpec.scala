@@ -235,7 +235,6 @@ class RoundThirteenOpsSpec extends AnyFunSuite {
 
   test("er10: harness serve covers every distinct delta name exactly once") {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.VectorFunctions.register(spark)
     val part = Tables.part(spark, sf)
     val out = graft.SparkEntry.queries("er10_delta_canonicalize")(spark, sf)
       .collect().map(r => (r.getString(0), r.getString(1)))
